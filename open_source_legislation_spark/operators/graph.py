@@ -21,13 +21,14 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
 
     Without this, every iteration STACKS its join/agg subtree on the
     previous plan — at 20+ iterations analysis/optimization time grows
-    superlinearly and the lineage chain re-derives every upstream subtree
-    on failure recovery: the classic iterative-DataFrame failure mode at
-    scale. ``localCheckpoint(eager=True)`` materializes the frame on
-    executor storage and replaces its plan with a scan of the
-    materialized blocks (the loop frames are one row per node — the
-    smallest frame in the computation, so the materialization is cheap
-    relative to one iteration's shuffle)."""
+    superlinearly: the classic iterative-DataFrame failure mode at scale.
+    ``localCheckpoint(eager=True)`` materializes the frame on executor
+    storage and replaces its plan with a scan of the materialized blocks
+    (the loop frames are one row per node — the smallest frame in the
+    computation, so the materialization is cheap relative to one
+    iteration's shuffle). It does NOT help failure recovery: with the
+    lineage cut, a lost executor's blocks cannot be recomputed and the
+    job fails instead."""
     return df.localCheckpoint(eager=True)
 
 

@@ -45,7 +45,6 @@ def conv_root_col(conv_id: Column) -> Column:
 def ordered_turns(
     transcripts: DataFrame,
     num_partitions: int | None = None,
-    clean: bool = True,
 ) -> DataFrame:
     """Dedup + stable order + clean.
 
@@ -62,17 +61,13 @@ def ordered_turns(
     # md5 tie-break matches the oracle and keeps full text out of sort keys
     w_dup = Window.partitionBy("conv_id", "turn_idx").orderBy("ts", F.md5("text"))
     w_ord = Window.partitionBy("conv_id").orderBy("turn_idx")
-    out = (
+    return (
         df.withColumn("dup_rank", F.row_number().over(w_dup))
         .filter(F.col("dup_rank") == 1)
         .drop("dup_rank")
         .withColumn("ord", F.row_number().over(w_ord))
+        .withColumn("clean_text", clean_text_udf("text"))
     )
-    if clean:
-        out = out.withColumn("clean_text", clean_text_udf("text"))
-    # clean=False: the caller fuses cleaning into its own kernel
-    # (extract.turn_features_udf) to save an Arrow round-trip
-    return out
 
 
 def reassemble_documents(

@@ -24,6 +24,9 @@ codegen throughout.
 
 from __future__ import annotations
 
+import math
+import struct
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -196,7 +199,21 @@ def _normalize_stratum_key(k, dt, col_name: str):
                 f"stratified_sample: key {k!r} is not numeric for column "
                 f"'{col_name}' ({dt})"
             )
-        return float(k)
+        # exact round-trip at the column's precision: an int above 2^53
+        # (2^24 for float) would otherwise round onto a neighbouring value
+        try:
+            f = float(k)
+            if isinstance(dt, T.FloatType):
+                f = struct.unpack("f", struct.pack("f", f))[0]
+            exact = f == k or math.isnan(f)
+        except OverflowError:  # beyond the column type's range
+            exact = False
+        if not exact:
+            raise ValueError(
+                f"stratified_sample: key {k!r} does not convert losslessly "
+                f"to {dt} column '{col_name}'"
+            )
+        return f
     if isinstance(dt, T.StringType):
         return str(k)
     return k  # other types (date, decimal, ...): pass through as given

@@ -1505,7 +1505,8 @@ def ensure_fetch_fixture(sf_dir: str) -> str:
     temp sibling and ``os.rename``-s the whole directory into place —
     never a truncate-rewrite of a file a concurrent run's executors may
     already be reading; the creator that loses the rename race discards
-    its temp build. The parquet read is one 2-column scan of the gate
+    its temp build, and any other rename failure discards it and
+    re-raises. The parquet read is one 2-column scan of the gate
     table — cheap at contract scale."""
     import hashlib
     import os
@@ -1540,7 +1541,11 @@ def ensure_fetch_fixture(sf_dir: str) -> str:
     try:
         os.rename(tmp, d)
     except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: theirs is ours
+        shutil.rmtree(tmp, ignore_errors=True)
+        # lost the race: theirs is ours; any other failure (EACCES,
+        # ENOSPC, ...) must surface here, not as a missing directory
+        if not os.path.exists(os.path.join(d, "_SUCCESS")):
+            raise
     return d
 
 

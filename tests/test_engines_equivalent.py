@@ -1,10 +1,14 @@
-"""The two derive engines — declarative window cascade vs streaming
-stack-machine kernel — must produce identical derived frames and identical
-triples on every input (duplicates, hot-conversation skew, dirty text)."""
+"""The derive engine must reproduce the pure-Python oracle exactly —
+triples, deduped/cleaned turns and hierarchy nodes — on every input
+(duplicates, hot-conversation skew, dirty text); its sharded variant must
+be bit-identical to the single-task kernel, and neither may depend on the
+partition count."""
 
 from __future__ import annotations
 
-from open_source_legislation_spark import schemas, synth
+import pandas as pd
+
+from open_source_legislation_spark import oracle, schemas, synth
 from open_source_legislation_spark.plans.pipeline import run_pipeline
 
 _COLS = [
@@ -23,34 +27,52 @@ _COLS = [
 ]
 
 
-def _frames(spark, entity_dict_df, pdf):
+def _rows(pdf: pd.DataFrame, cols: list[str]) -> set[tuple]:
+    """Row set of a pandas frame with NaN/NaT read as None (Spark's null)."""
+    return {
+        tuple(None if pd.isna(v) else v for v in row)
+        for row in pdf[cols].itertuples(index=False)
+    }
+
+
+def _assert_matches_oracle(spark, entity_dict_df, entity_dict_pd, pdf):
     tdf = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
-    out = {}
-    for eng in ("stream", "windows"):
-        res = run_pipeline(spark, tdf, entity_dict_df, engine=eng)
-        out[eng] = (
-            set(map(tuple, res.turns.select(*_COLS).collect())),
-            set(map(tuple, res.triples.select("subj", "pred", "obj").collect())),
+    res = run_pipeline(spark, tdf, entity_dict_df)
+    try:
+        triples = set(
+            map(tuple, res.triples.select("subj", "pred", "obj").collect())
         )
+        turns = set(
+            map(tuple, res.turns.select("conv_id", "turn_idx", "clean_text").collect())
+        )
+        nodes = set(
+            map(
+                tuple,
+                res.nodes.select("node_id", "level_classifier", "parent", "status")
+                .collect(),
+            )
+        )
+    finally:
         res.cleanup()
-    return out
+    o = oracle.run_oracle(pdf, entity_dict_pd)
+    assert triples  # non-empty
+    assert triples == _rows(o["triples"], ["subj", "pred", "obj"])
+    assert turns == _rows(o["turns"], ["conv_id", "turn_idx", "clean_text"])
+    assert nodes == _rows(
+        o["nodes"], ["node_id", "level_classifier", "parent", "status"]
+    )
 
 
-def test_engines_equivalent_base(spark, entity_dict_df):
+def test_engines_equivalent_base(spark, entity_dict_df, entity_dict_pd):
     pdf = synth.make_transcripts(seed=13, n_turns_target=900)
-    out = _frames(spark, entity_dict_df, pdf)
-    assert out["stream"][0] == out["windows"][0]
-    assert out["stream"][1] == out["windows"][1]
-    assert out["stream"][1]  # non-empty
+    _assert_matches_oracle(spark, entity_dict_df, entity_dict_pd, pdf)
 
 
-def test_engines_equivalent_skewed_dups(spark, entity_dict_df):
+def test_engines_equivalent_skewed_dups(spark, entity_dict_df, entity_dict_pd):
     pdf = synth.make_transcripts(
         seed=99, n_turns_target=1500, hot_fraction=0.35, dup_fraction=0.08
     )
-    out = _frames(spark, entity_dict_df, pdf)
-    assert out["stream"][0] == out["windows"][0]
-    assert out["stream"][1] == out["windows"][1]
+    _assert_matches_oracle(spark, entity_dict_df, entity_dict_pd, pdf)
 
 
 def test_sharded_engine_equivalent_on_giant_conv(spark, entity_dict_df):
@@ -129,9 +151,7 @@ def test_stream_engine_partitioning_invariant(spark, entity_dict_df):
     try:
         base = None
         for nparts in (1, 3, 16):
-            res = run_pipeline(
-                spark, tdf, entity_dict_df, num_partitions=nparts, engine="stream"
-            )
+            res = run_pipeline(spark, tdf, entity_dict_df, num_partitions=nparts)
             got = set(
                 map(tuple, res.triples.select("subj", "pred", "obj").collect())
             )

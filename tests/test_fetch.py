@@ -7,8 +7,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from open_source_legislation_spark import queries
 from open_source_legislation_spark.sources import fetch
 
 
@@ -81,3 +85,35 @@ def test_fetch_feeds_the_parse_layer(spark, tmp_path):
     got = sorted(r.item for r in items.collect())
     assert got == ["title=1 Alpha", "title=2 Beta"]
     assert os.path.exists(p)
+
+
+def test_fetch_fixture_rename_failure_raises(tmp_path, monkeypatch):
+    """A failed publish of the fetch fixture raises where it happens (not
+    later as a fetch-vs-oracle mismatch over a directory that does not
+    exist) and leaves no temp build behind; losing the publish race to a
+    concurrent creator still returns the complete directory."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": [1, 2, 4], "text": ["a", "b", "c"]}),
+        str(sf / "documents.parquet"),
+    )
+    dest = tmp_path / "fixture"
+    monkeypatch.setattr(queries, "_fetch_fixture_dir", lambda sf_dir, digest: str(dest))
+
+    def denied(src, dst):
+        raise PermissionError(13, "Permission denied", dst)
+
+    monkeypatch.setattr(os, "rename", denied)
+    with pytest.raises(PermissionError):
+        queries.ensure_fetch_fixture(str(sf))
+    assert os.listdir(tmp_path) == ["sf"]  # no fixture, no temp build
+
+    def lost_race(src, dst):
+        os.makedirs(dst)
+        open(os.path.join(dst, "_SUCCESS"), "w").close()
+        raise OSError(39, "Directory not empty", dst)
+
+    monkeypatch.setattr(os, "rename", lost_race)
+    assert queries.ensure_fetch_fixture(str(sf)) == str(dest)
+    assert sorted(os.listdir(tmp_path)) == ["fixture", "sf"]

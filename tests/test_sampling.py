@@ -252,6 +252,12 @@ def test_stratified_sample_rejects_lossy_and_colliding_keys(spark):
     docs = spark.createDataFrame([(1, 2020)], "doc_id long, yr long")
     with pytest.raises(ValueError, match="losslessly"):
         sampling.stratified_sample(docs, "yr", {2020.5: 10000})
+    # an int key past the float column's exact-integer range would round
+    # onto a neighbouring stratum (2^53 + 1 -> 2^53 as double)
+    for dt, big in (("double", 2**53 + 1), ("float", 2**24 + 1)):
+        fdocs = spark.createDataFrame([(1, float(big - 1))], f"doc_id long, w {dt}")
+        with pytest.raises(ValueError, match="losslessly"):
+            sampling.stratified_sample(fdocs, "w", {big: 10000})
     sdocs = spark.createDataFrame([(1, "2020")], "doc_id long, yr string")
     with pytest.raises(ValueError, match="collide"):
         sampling.stratified_sample(sdocs, "yr", {2020: 10000, "2020": 5000})
