@@ -18,8 +18,9 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full KG pipeline (ordered reassembly → hierarchy windows →
-    mention/definition Arrow kernels → broadcast linking) over transcripts
+    """Flagship: full KG pipeline (pre-shuffle payload Arrow kernel →
+    conv_id shuffle + sort → sequential state pass (dedup, ordinals,
+    hierarchy) → broadcast linking) over transcripts
     synthesized from the sf0.001 documents table; returns the triples frame.
     """
     from open_source_legislation_spark import schemas, synth

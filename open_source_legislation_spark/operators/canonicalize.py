@@ -16,8 +16,9 @@ the iteration cap; composing each round with one pointer-jump
 (path-halving) self-join makes label distances collapse geometrically, so
 convergence is O(log diameter) rounds (25 rounds cover any practical
 graph) — the same doubling idea large-star/small-star uses. Each round is
-two shuffle joins + one aggregation; ``localCheckpoint`` truncates the
-lineage so the plan does not grow across iterations. A component left
+two shuffle joins + one aggregation; ``_cache.truncate_lineage`` cuts the
+lineage so the plan does not grow across iterations, and each superseded
+round's checkpoint is released. A component left
 unconverged at the cap raises instead of returning wrong labels.
 """
 
@@ -26,11 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._cache import CheckpointHandle, truncate_lineage
+
 
 def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
     """``(member, canonical)`` for every vertex in ``edges(src, dst)``,
     canonical = lexicographic-min id of the component (matches the oracle's
-    union-find labeling)."""
+    union-find labeling). The returned frame scans its round's checkpoint,
+    handed over as ``_osl_persists``; every other round's is released."""
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
@@ -41,9 +45,10 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
         .distinct()
         .withColumn("canonical", F.col("member"))
     )
-    sym = sym.localCheckpoint(eager=True)
-    labels = labels.localCheckpoint(eager=True)
-    for i in range(max_iterations):
+    sym = truncate_lineage(sym)
+    labels = truncate_lineage(labels)
+    sym_h, labels_h = CheckpointHandle(sym), CheckpointHandle(labels)
+    for _ in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["member"], "inner")
             .groupBy(F.col("a").alias("member"))
@@ -71,7 +76,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
         )
         # checkpoint each round: the convergence check materializes the
         # frame anyway, and this truncates the growing join lineage
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = truncate_lineage(new_labels)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "member")
@@ -79,10 +84,14 @@ def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFram
             .limit(1)
             .count()
         )
-        _ = i
-        labels = new_labels
+        labels_h.unpersist()
+        labels, labels_h = new_labels, CheckpointHandle(new_labels)
         if changed == 0:
+            sym_h.unpersist()
+            labels._osl_persists = [labels_h]
             return labels
+    sym_h.unpersist()
+    labels_h.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} rounds "
         "(component diameter beyond 2^rounds — raise max_iterations)"

@@ -20,19 +20,18 @@ as:
   engine to ``oracle.py``).
 
 At 10^12 turns per-conv state is O(1)-ish per row, so hot conversations
-cost time, not memory; the expensive reassembly path is chunk-salted
-separately (see ``reassembly.py``).
+cost time, not memory; the expensive per-node text reassembly is
+chunk-salted separately (see :func:`node_text_agg`).
 """
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .. import rules
-from .reassembly import conv_root_col
 
 # ---------------------------------------------------------------------------
 # Arrow kernels (scalar pandas UDFs over rules.py)
@@ -564,7 +563,7 @@ def derive_nodes_sharded(
     # the per-round DISK_ONLY caches back the returned plan; the consumer
     # that materializes `out` elsewhere (e.g. run_pipeline's parquet spill)
     # releases them via this handle once its copy is durable
-    out._osl_shard_persists = persisted
+    out._osl_persists = persisted
     return out
 
 
@@ -586,6 +585,11 @@ def citation_expr(node_id_col) -> "F.Column":
         )
         pieces.append(F.when(num != "", F.concat(F.lit(label + " "), num)))
     return F.nullif(F.concat_ws(", ", *pieces), F.lit(""))
+
+
+def conv_root_col(conv_id: Column) -> Column:
+    """Column form of rules.conv_root_id."""
+    return F.concat(F.lit("conv="), conv_id)
 
 
 def nodes_table(derived: DataFrame) -> DataFrame:
@@ -638,11 +642,12 @@ def node_text_agg(
     turn peeled as the node's addendum is EXCLUDED (the reference removes
     the trailing source paragraph from the node body before storing it,
     extract_addendum scrapeECFR.py:867-992). Two-phase chunk-salted
-    aggregation (the ``reassembly.reassemble_documents`` shape) bounds
-    per-reduce-task state on hot nodes at 10^12-turn scale; ``ord`` is
-    unique within a node's conversation, so chunk ranges align with text
-    order. ``addenda`` (one row per node, ≪ turns) rides a broadcast
-    anti-join.
+    aggregation: phase 1 groups on ``(current_node, ord div chunk_size)``
+    so no single reduce task holds a whole hot node, phase 2 stitches the
+    ordered chunks — bounded per-task state at 10^12-turn scale (SURVEY
+    §7.4.1); ``ord`` is unique within a node's conversation, so chunk
+    ranges align with text order. ``addenda`` (one row per node, ≪
+    turns) rides a broadcast anti-join.
 
     Output: ``node_id, node_text_list (array<string>), node_text (string),
     n_paragraphs``.

@@ -13,23 +13,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+from ._cache import CheckpointHandle, truncate_lineage
 from ._cache import persist_disk as _persist_disk
 
+# Lineage-truncation cadence per loop: iterations between checkpoints of
+# the evolving frame. A loop no longer than its cadence keeps the pure
+# plan (measured 25-40% faster at iters=3). BFS's ``settled`` and
+# ``frontier`` embed each other, so its plan grows ~3x per hop and it
+# truncates every 3 hops; the 3-hop k-hop query keeps the pure plan
+# (SCALE.md, iterative graph loops).
+_PAGERANK_EVERY = 8
+_LPA_EVERY = 8
+_BFS_EVERY = 3
 
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Cut the logical plan under an iterative loop's evolving frame.
 
-    Without this, every iteration STACKS its join/agg subtree on the
-    previous plan — at 20+ iterations analysis/optimization time grows
-    superlinearly: the classic iterative-DataFrame failure mode at scale.
-    ``localCheckpoint(eager=True)`` materializes the frame on executor
-    storage and replaces its plan with a scan of the materialized blocks
-    (the loop frames are one row per node — the smallest frame in the
-    computation, so the materialization is cheap relative to one
-    iteration's shuffle). It does NOT help failure recovery: with the
-    lineage cut, a lost executor's blocks cannot be recomputed and the
-    job fails instead."""
-    return df.localCheckpoint(eager=True)
+def _checkpoint_over(held: list, *frames: DataFrame) -> list[DataFrame]:
+    """:func:`truncate_lineage` each frame, then release the checkpoints
+    it supersedes: ``held`` is replaced in place by the new handles. The
+    new frames' plans scan their own blocks, so nothing reads the old."""
+    out = [truncate_lineage(f) for f in frames]
+    for h in held:
+        h.unpersist()
+    held[:] = [CheckpointHandle(f) for f in out]
+    return out
 
 
 def hierarchy_edges(nodes: DataFrame) -> DataFrame:
@@ -134,7 +140,6 @@ def pagerank_int(
     iters: int = 3,
     base: int = 1_000_000,
     damping_ppm: int = 850_000,
-    persist_every: int | None = 8,
 ) -> DataFrame:
     """Node importance over the graph — fixed-iteration PageRank in EXACT
     integer arithmetic (ranks in micro-units):
@@ -157,36 +162,27 @@ def pagerank_int(
     one partial-aggregated groupBy(dst); ranks frame is one row per node.
     Duplicate edges and self-loops are removed up front.
 
-    Lineage control: the loop-invariant frames (``e``, ``outdeg``,
+    Lineage control, for ``iters > _PAGERANK_EVERY`` (shorter loops keep
+    the pure plan): the loop-invariant frames (``e``, ``outdeg``,
     ``nodes``) are persisted DISK_ONLY for the loop's lifetime (each is
     consumed every iteration — uncached, iteration *k* re-derives the
     distinct + degree subtrees *k* times), and the evolving ``ranks``
-    frame is lineage-truncated every ``persist_every`` iterations (see
-    :func:`_truncate_lineage`; ``None`` disables both, restoring the pure
-    single-lineage plan). At ``iters <= persist_every`` the knob
-    auto-disables: the plan is shallow and the pure lineage beats paying
-    the DISK_ONLY materialization (measured +25-40% at iters=3); force
-    persisting on short loops with a smaller ``persist_every``. The
-    persisted handles are handed to the caller on
-    the result as ``_osl_persists`` for release after consumption (the
+    frame is lineage-truncated every ``_PAGERANK_EVERY`` iterations, each
+    checkpoint releasing the one before it. The persisted frames and the
+    last checkpoint are handed to the caller on the result as
+    ``_osl_persists`` for release after consumption (the
     :func:`triangle_counts` handle-handover pattern).
 
     Output: ``(node, rank)`` with rank after ``iters`` iterations.
     """
-    if persist_every is not None and persist_every < 1:
-        raise ValueError("pagerank_int: persist_every must be >= 1 or None")
-    # Engage only when the loop is long enough to amortize the DISK_ONLY
-    # materialization (measured ~25-40% overhead at iters=3 on sf0.1);
-    # pass a smaller persist_every to force persisting on short loops.
-    if persist_every is not None and iters <= persist_every:
-        persist_every = None
+    truncate = iters > _PAGERANK_EVERY
     e = (
         edges.select(F.col("src"), F.col("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
     persists = []
-    if persist_every is not None:
+    if truncate:
         e = _persist_disk(e)
         persists.append(e)
     nodes = (
@@ -195,12 +191,13 @@ def pagerank_int(
         .distinct()
     )
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    if persist_every is not None:
+    if truncate:
         nodes = _persist_disk(nodes)
         outdeg = _persist_disk(outdeg)
         persists += [nodes, outdeg]
     ranks = nodes.withColumn("rank", F.lit(base).cast("long"))
     hold = (base - damping_ppm)
+    held: list[CheckpointHandle] = []
     for it in range(iters):
         contrib = (
             e.join(ranks, e["src"] == ranks["node"])
@@ -235,15 +232,13 @@ def pagerank_int(
             .cast("long")
             .alias("rank"),
         )
-        if persist_every is not None and (it + 1) % persist_every == 0 and (
-            it + 1
-        ) < iters:
-            ranks = _truncate_lineage(ranks)
-    ranks._osl_persists = persists
+        if truncate and (it + 1) % _PAGERANK_EVERY == 0 and it + 1 < iters:
+            (ranks,) = _checkpoint_over(held, ranks)
+    ranks._osl_persists = persists + held
     return ranks
 
 
-def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation over the undirected graph — the
     standard degree-ordered (compact-forward) formulation that keeps the
     join fan-out bounded on skewed graphs.
@@ -263,13 +258,11 @@ def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
 
     The oriented edge list is consumed FOUR times (both wedge sides, the
     closing probe, the node universe); without a cache each consumer
-    re-scans the input and re-runs the distinct + degree joins, so with
-    ``cache_oriented`` (default) it is persisted DISK_ONLY — O(|E|), the
-    same footprint class as the input. The cache is handed to the caller
-    on the result as ``_osl_persists`` for release after consumption —
-    the contract/bench harnesses unpersist it after collecting (the same
-    handle-handover pattern as the sharded engine's
-    ``_osl_shard_persists``).
+    re-scans the input and re-runs the distinct + degree joins, so it is
+    persisted DISK_ONLY — O(|E|), the same footprint class as the input.
+    The cache is handed to the caller on the result as ``_osl_persists``
+    for release after consumption — the contract/bench harnesses
+    unpersist it after collecting.
 
     Every triangle is produced exactly once (its corners are totally
     ordered by (degree, id)). Output: ``(node, n_triangles: bigint)``.
@@ -299,10 +292,7 @@ def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
         F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("x"),
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("y"),
     )
-    persists = []
-    if cache_oriented:
-        o = _persist_disk(o)
-        persists.append(o)
+    o = _persist_disk(o)
     nodes = (
         o.select(F.col("x").alias("node"))
         .union(o.select(F.col("y").alias("node")))
@@ -324,13 +314,11 @@ def triangle_counts(edges: DataFrame, cache_oriented: bool = True) -> DataFrame:
         "node",
         F.coalesce(F.col("n_triangles"), F.lit(0).cast("long")).alias("n_triangles"),
     )
-    out._osl_persists = persists
+    out._osl_persists = [o]
     return out
 
 
-def label_propagation(
-    edges: DataFrame, iters: int = 2, persist_every: int | None = 8
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation, made fully
     deterministic: every node starts labeled with its own id; each
     iteration it adopts the most frequent label among its neighbors,
@@ -345,19 +333,16 @@ def label_propagation(
     ``max(struct(count, -label))`` so the pick is a second partial
     aggregate, NOT a sort window. Labels frame stays one row per node.
 
-    Lineage control (same contract as :func:`pagerank_int`, including
-    the short-loop auto-disable): ``sym`` is loop-invariant (probed
-    every iteration) and persisted DISK_ONLY — ``nodes`` is NOT, its
-    single consumer is the initial labels seed; the evolving ``labels``
-    frame is lineage-truncated every ``persist_every`` iterations;
-    handles handed over via ``_osl_persists``; ``None`` disables.
+    Lineage control (same contract as :func:`pagerank_int`, cadence
+    ``_LPA_EVERY``, shorter loops keep the pure plan): ``sym`` is
+    loop-invariant (probed every iteration) and persisted DISK_ONLY —
+    ``nodes`` is NOT, its single consumer is the initial labels seed; the
+    evolving ``labels`` frame is lineage-truncated every ``_LPA_EVERY``
+    iterations; handles handed over via ``_osl_persists``.
 
     Output: ``(node, label: bigint)`` after ``iters`` iterations.
     """
-    if persist_every is not None and persist_every < 1:
-        raise ValueError("label_propagation: persist_every must be >= 1 or None")
-    if persist_every is not None and iters <= persist_every:
-        persist_every = None  # short loop: pure plan wins (see pagerank_int)
+    truncate = iters > _LPA_EVERY
     e = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
@@ -368,7 +353,7 @@ def label_propagation(
         .distinct()
     )
     persists = []
-    if persist_every is not None:
+    if truncate:
         sym = _persist_disk(sym)
         persists.append(sym)
     # nodes is NOT persisted: unlike pagerank_int (where it re-enters the
@@ -376,6 +361,7 @@ def label_propagation(
     # labels seed — and it reads from the already-persisted sym anyway.
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("label", F.col("node"))
+    held: list[CheckpointHandle] = []
     for it in range(iters):
         nb = sym.join(
             labels.withColumnRenamed("node", "dst"), "dst"
@@ -390,11 +376,9 @@ def label_propagation(
             )
             .select("node", (-F.col("m.nl")).alias("label"))
         )
-        if persist_every is not None and (it + 1) % persist_every == 0 and (
-            it + 1
-        ) < iters:
-            labels = _truncate_lineage(labels)
-    labels._osl_persists = persists
+        if truncate and (it + 1) % _LPA_EVERY == 0 and it + 1 < iters:
+            (labels,) = _checkpoint_over(held, labels)
+    labels._osl_persists = persists + held
     return labels
 
 
@@ -402,7 +386,6 @@ def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    persist_every: int | None = 8,
 ) -> DataFrame:
     """Directed k-hop reachability: the minimum hop distance (≤
     ``max_hops``) from a seed set to every reachable node — the "what is
@@ -416,32 +399,31 @@ def bfs_distances(
     product. Deterministic by construction: distance is a pure min, no
     tie-breaks needed.
 
-    Lineage control (same contract as :func:`pagerank_int`): the edge
-    list is loop-invariant and persisted DISK_ONLY (it is probed every
-    hop); the evolving ``settled``/``frontier`` frames — ``settled`` is a
-    union CHAIN that otherwise deepens by one subtree per hop — are
-    lineage-truncated every ``persist_every`` hops; handles handed over
-    via ``_osl_persists``; ``None`` disables.
+    Lineage control (same contract as :func:`pagerank_int`, cadence
+    ``_BFS_EVERY``, shorter walks keep the pure plan): the edge list is
+    loop-invariant and persisted DISK_ONLY (it is probed every hop); the
+    evolving ``settled``/``frontier`` frames embed each other — ``new``
+    reads both, and both then read ``new`` — so the plan TREE grows ~3x
+    per hop and both are lineage-truncated every ``_BFS_EVERY`` hops;
+    handles handed over via ``_osl_persists``.
 
     ``sources``: DataFrame with a ``node`` column. Output: ``(node,
     dist: int)`` for every node within ``max_hops`` (seeds at 0).
     """
-    if persist_every is not None and persist_every < 1:
-        raise ValueError("bfs_distances: persist_every must be >= 1 or None")
-    if persist_every is not None and max_hops <= persist_every:
-        persist_every = None  # short walk: pure plan wins (see pagerank_int)
+    truncate = max_hops > _BFS_EVERY
     e = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
     persists = []
-    if persist_every is not None:
+    if truncate:
         e = _persist_disk(e)
         persists.append(e)
     seeds = sources.select("node").distinct()
     settled = seeds.withColumn("dist", F.lit(0))
     frontier = seeds
+    held: list[CheckpointHandle] = []
     for h in range(1, max_hops + 1):
         nxt = (
             frontier.join(e, frontier["node"] == e["src"])
@@ -453,9 +435,8 @@ def bfs_distances(
         )
         settled = settled.unionByName(new)
         frontier = new
-        if persist_every is not None and h % persist_every == 0 and h < max_hops:
-            settled = _truncate_lineage(settled)
-            frontier = _truncate_lineage(frontier)
+        if truncate and h % _BFS_EVERY == 0 and h < max_hops:
+            settled, frontier = _checkpoint_over(held, settled, frontier)
     out = settled.select("node", F.col("dist").cast("int").alias("dist"))
-    out._osl_persists = persists
+    out._osl_persists = persists + held
     return out

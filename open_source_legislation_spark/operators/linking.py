@@ -29,18 +29,6 @@ from pyspark.sql.functions import pandas_udf
 
 from .. import rules
 
-_CAND_TYPE = T.ArrayType(
-    T.StructType(
-        [T.StructField("priority", T.IntegerType()), T.StructField("key", T.StringType())]
-    )
-)
-
-
-@pandas_udf(_CAND_TYPE)
-def candidate_keys_udf(raw_keys: pd.Series) -> pd.Series:
-    return raw_keys.map(lambda k: rules.candidate_keys(k) if k is not None else [])
-
-
 _CAND3_TYPE = T.StructType(
     [
         T.StructField("k1", T.StringType()),

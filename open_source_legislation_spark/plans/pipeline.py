@@ -339,7 +339,7 @@ def run_pipeline(
     derived.write.mode("overwrite").parquet(spill_dir)
     # the sharded engine's per-round DISK_ONLY caches back the derived
     # plan; the spill copy subsumes them
-    for cached in getattr(derived, "_osl_shard_persists", []):
+    for cached in getattr(derived, "_osl_persists", []):
         cached.unpersist()
     # explicit schema: an empty input writes no part files, and the
     # schema must survive that

@@ -1,6 +1,6 @@
 """Embedding enrichment (operators/enrich.py) — the reference's phase-3
 loop: pending-work predicate, batched enrichment, idempotent re-run, and
-equivalence of the expression and mapInPandas variants."""
+equivalence of the JVM expression and the fused Arrow UDF."""
 
 from __future__ import annotations
 
@@ -57,16 +57,21 @@ def test_expr_and_mapinpandas_variants_agree(docs):
     expr = docs.drop("embedding").withColumn(
         "embedding", enrich.hash_embed_expr(F.col("text"), dim=16)
     )
-    mip = enrich.embed_map_in_pandas(docs.drop("embedding"), dim=16)
+    fused = docs.select(
+        "doc_id",
+        enrich.node_enrich_udf(dim=16)(F.col("text"), F.col("text"))
+        .getField("embedding")
+        .alias("embedding"),
+    )
     a = {r["doc_id"]: tuple(r["embedding"]) for r in expr.collect()}
-    b = {r["doc_id"]: tuple(r["embedding"]) for r in mip.collect()}
+    b = {r["doc_id"]: tuple(r["embedding"]) for r in fused.collect()}
     assert a == b
 
 
 def test_fused_node_enrich_matches_unfused(spark):
     """node_enrich_udf must equal the unfused pair it replaced in the
     pipeline: n_tokens = size(split(trim(lower(t)), '\\s+')) under the
-    isNotNull guard, embedding = hash_embed_udf(coalesce(t, ''))."""
+    isNotNull guard, embedding = hash_embed_expr(coalesce(t, ''))."""
     rows = [
         (0, "the quick brown fox"),
         (1, ""),                      # JVM split('') -> [''] i.e. 1 token
@@ -85,8 +90,8 @@ def test_fused_node_enrich_matches_unfused(spark):
             F.col("t").isNotNull(),
             F.size(F.split(F.trim(F.lower("t")), r"\s+")),
         ).alias("n_tokens"),
-        enrich.hash_embed_udf(dim=16)(F.coalesce("t", F.lit(""))).alias("emb"),
-        enrich.hash_embed_udf(dim=16)(F.col("nm")).alias("nemb"),
+        enrich.hash_embed_expr(F.coalesce("t", F.lit("")), dim=16).alias("emb"),
+        enrich.hash_embed_expr(F.col("nm"), dim=16).alias("nemb"),
     )
     fused = df.select(
         "id", enrich.node_enrich_udf(dim=16)(F.col("t"), F.col("nm")).alias("e")

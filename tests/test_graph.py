@@ -1,6 +1,8 @@
 """Graph materialization + the reference's SQL invariants
 (reference CLAUDE.md:437-452) as DataFrame assertions."""
 
+from collections import Counter, deque
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -134,8 +136,63 @@ def test_triangle_counts_match_bruteforce(spark):
     assert got == brute
 
 
+def _py_label_propagation(edges, iters):
+    """Synchronous LPA reference: most frequent neighbor label, ties to
+    the smallest label."""
+    und = {tuple(sorted(p)) for p in edges if p[0] != p[1]}
+    adj: dict = {}
+    for a, b in und:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    lab = {n: n for n in adj}
+    for _ in range(iters):
+        lab = {
+            n: max(
+                Counter(lab[m] for m in adj[n]).items(),
+                key=lambda kv: (kv[1], -kv[0]),
+            )[0]
+            for n in adj
+        }
+    return lab
+
+
+def _py_pagerank(edges, iters, base=1_000_000, damping_ppm=850_000):
+    """The exact-integer recurrence from the ``pagerank_int`` docstring."""
+    e = {p for p in edges if p[0] != p[1]}
+    nodes = {x for p in e for x in p}
+    outdeg = Counter(a for a, _ in e)
+    ranks = {n: base for n in nodes}
+    for _ in range(iters):
+        incoming = Counter()
+        for a, b in e:
+            incoming[b] += ranks[a] // outdeg[a]
+        ranks = {
+            n: (base - damping_ppm) + damping_ppm * incoming[n] // base
+            for n in nodes
+        }
+    return ranks
+
+
+def _py_bfs(edges, seeds, max_hops):
+    """Min hop distance (<= max_hops) from the seed set, seeds at 0."""
+    adj: dict = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+    dist = {s: 0 for s in seeds}
+    q = deque((s, 0) for s in seeds)
+    while q:
+        n, d = q.popleft()
+        if d >= max_hops:
+            continue
+        for m in adj.get(n, ()):
+            if m not in dist:
+                dist[m] = d + 1
+                q.append((m, d + 1))
+    return dist
+
+
 def test_label_propagation_matches_bruteforce(spark):
-    from collections import Counter
     import random
 
     from open_source_legislation_spark.operators.graph import label_propagation
@@ -144,21 +201,7 @@ def test_label_propagation_matches_bruteforce(spark):
     edges = {(rng.randrange(15), rng.randrange(15)) for _ in range(40)}
     e = spark.createDataFrame(list(edges), "src long, dst long")
     got = {r.node: r.label for r in label_propagation(e, iters=2).collect()}
-    und = {tuple(sorted(p)) for p in edges if p[0] != p[1]}
-    adj: dict = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    lab = {n: n for n in adj}
-    for _ in range(2):
-        lab = {
-            n: max(
-                Counter(lab[m] for m in adj[n]).items(),
-                key=lambda kv: (kv[1], -kv[0]),
-            )[0]
-            for n in adj
-        }
-    assert got == lab
+    assert got == _py_label_propagation(edges, 2)
 
 
 def test_graph_analytics_empty_edges(spark):
@@ -180,7 +223,6 @@ def test_graph_analytics_empty_edges(spark):
 
 def test_bfs_distances_match_bruteforce(spark):
     import random
-    from collections import deque
 
     from open_source_legislation_spark.operators.graph import bfs_distances
 
@@ -188,22 +230,10 @@ def test_bfs_distances_match_bruteforce(spark):
     edges = {(rng.randrange(30), rng.randrange(30)) for _ in range(70)}
     e = spark.createDataFrame(list(edges), "src long, dst long")
     seeds = spark.createDataFrame([(0,), (1,)], "node long")
-    got = {r.node: r.dist for r in bfs_distances(e, seeds, max_hops=3).collect()}
-    adj: dict = {}
-    for a, b in edges:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-    dist = {0: 0, 1: 0}
-    q = deque([(0, 0), (1, 0)])
-    while q:
-        n, d = q.popleft()
-        if d >= 3:
-            continue
-        for m in adj.get(n, ()):
-            if m not in dist:
-                dist[m] = d + 1
-                q.append((m, d + 1))
-    assert got == dist
+    out = bfs_distances(e, seeds, max_hops=3)
+    got = {r.node: r.dist for r in out.collect()}
+    _unpersist(out)
+    assert got == _py_bfs(edges, {0, 1}, 3)
 
 
 def _ring_edges(spark, n=30):
@@ -218,65 +248,91 @@ def _unpersist(df):
         h.unpersist()
 
 
+def _plan_len(df):
+    return len(df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def _ring_pairs(e):
+    return [(r["src"], r["dst"]) for r in e.collect()]
+
+
 def test_iterative_loops_lineage_bounded_at_high_iters(spark):
-    """The iters=25 regime: with the default persist_every the evolving
-    frame's plan is truncated every k iterations, so plan size stays
-    BOUNDED instead of stacking 25 join/agg subtrees (the iterative-
-    DataFrame failure mode at scale) — and the results are identical to
-    the pure single-lineage plan."""
+    """The iters=25 regime: the evolving frame's plan is truncated every
+    cadence's worth of iterations, so plan size stays BOUNDED — it does
+    not grow with iterations and stays below the pure (untruncated)
+    plan one cadence long — instead of stacking 25 join/agg subtrees (the
+    iterative-DataFrame failure mode at scale); the results equal plain
+    Python references."""
     e = _ring_edges(spark)
+    pairs = _ring_pairs(e)
 
-    def plan_len(df):
-        return len(df._jdf.queryExecution().optimizedPlan().toString())
+    pr = {n: graph.pagerank_int(e, iters=n) for n in (25, 9, 8)}
+    assert _plan_len(pr[25]) <= 1.05 * _plan_len(pr[9])
+    assert _plan_len(pr[25]) < _plan_len(pr[8])
+    got = {r["node"]: r["rank"] for r in pr[25].collect()}
+    for df in pr.values():
+        _unpersist(df)
+    assert got == _py_pagerank(pairs, 25)
 
-    deep = graph.pagerank_int(e, iters=25, persist_every=None)
-    knob = graph.pagerank_int(e, iters=25, persist_every=5)
-    assert plan_len(knob) < plan_len(deep) / 2
-    assert sorted(map(tuple, knob.collect())) == sorted(map(tuple, deep.collect()))
-    _unpersist(knob)
+    lp = {n: graph.label_propagation(e, iters=n) for n in (25, 9, 8)}
+    assert _plan_len(lp[25]) <= 1.05 * _plan_len(lp[9])
+    assert _plan_len(lp[25]) < _plan_len(lp[8])
+    got = {r["node"]: r["label"] for r in lp[25].collect()}
+    for df in lp.values():
+        _unpersist(df)
+    assert got == _py_label_propagation(pairs, 25)
 
-    deep_l = graph.label_propagation(e, iters=25, persist_every=None)
-    knob_l = graph.label_propagation(e, iters=25, persist_every=5)
-    assert plan_len(knob_l) < plan_len(deep_l) / 2
-    assert sorted(map(tuple, knob_l.collect())) == sorted(map(tuple, deep_l.collect()))
-    _unpersist(knob_l)
-
-    # BFS's un-truncated plan is the worst of the three: settled embeds
-    # frontier embeds settled, so the TREE (not DAG) size grows ~2.4^hops
-    # — at 12 hops even .toString() of the deep plan OOMs the JVM, which
-    # is the failure mode itself. Compare deep-vs-knob at 8 hops where
-    # the deep tree is still tractable, then pin the knob's correctness
-    # at 12 hops against plain brute force.
+    # BFS truncates every 3 hops; 9 and 12 hops both end three pure hops
+    # after their last checkpoint, so their plans must match in size
     seeds = spark.createDataFrame([(0,)], "node long")
-    deep_b = graph.bfs_distances(e, seeds, max_hops=8, persist_every=None)
-    knob_b = graph.bfs_distances(e, seeds, max_hops=8, persist_every=3)
-    assert plan_len(knob_b) < plan_len(deep_b)
-    assert sorted(map(tuple, knob_b.collect())) == sorted(map(tuple, deep_b.collect()))
-    _unpersist(knob_b)
-
-    knob12 = graph.bfs_distances(e, seeds, max_hops=12, persist_every=4)
-    got12 = {r["node"]: r["dist"] for r in knob12.collect()}
-    _unpersist(knob12)
-    adj = {}
-    for r in e.collect():
-        adj.setdefault(r["src"], []).append(r["dst"])
-    dist, q = {0: 0}, [(0, 0)]
-    while q:
-        n, d = q.pop(0)
-        if d >= 12:
-            continue
-        for m in adj.get(n, []):
-            if m not in dist:
-                dist[m] = d + 1
-                q.append((m, d + 1))
-    assert got12 == dist
+    b9 = graph.bfs_distances(e, seeds, max_hops=9)
+    b12 = graph.bfs_distances(e, seeds, max_hops=12)
+    assert _plan_len(b12) <= 1.05 * _plan_len(b9)
+    got12 = {r["node"]: r["dist"] for r in b12.collect()}
+    _unpersist(b9)
+    _unpersist(b12)
+    assert got12 == _py_bfs(pairs, {0}, 12)
 
 
-def test_iterative_loops_persist_every_validation(spark):
+def test_bfs_distances_plan_bounded_at_default_settings(spark):
+    """``settled`` and ``frontier`` embed each other, so an untruncated
+    BFS plan grows ~3x per hop (1.9M characters at 8 hops). At default
+    settings an 8-hop walk must already be truncated: plan size is
+    checked BEFORE any action, then the result against Python BFS."""
     e = _ring_edges(spark)
-    with pytest.raises(ValueError, match="persist_every"):
-        graph.pagerank_int(e, persist_every=0)
-    with pytest.raises(ValueError, match="persist_every"):
-        graph.label_propagation(e, persist_every=0)
-    with pytest.raises(ValueError, match="persist_every"):
-        graph.bfs_distances(e, e.select(F.col("src").alias("node")), persist_every=-1)
+    seeds = spark.createDataFrame([(0,)], "node long")
+    out = graph.bfs_distances(e, seeds, max_hops=8)
+    assert _plan_len(out) < 20_000
+    got = {r["node"]: r["dist"] for r in out.collect()}
+    _unpersist(out)
+    assert got == _py_bfs(_ring_pairs(e), {0}, 8)
+
+
+def _stored_rdd_ids(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_iterative_loops_release_storage(spark):
+    """Every cache and lineage checkpoint a loop creates is either released
+    inside the loop or handed over via ``_osl_persists``: after collect +
+    unpersisting the handles, block storage holds exactly the RDDs it
+    held before the call."""
+    from open_source_legislation_spark.operators import canonicalize
+
+    e = _ring_edges(spark)
+    seeds = spark.createDataFrame([(0,)], "node long")
+    builds = {
+        # 17 iterations: the checkpoint at 8 is released inside the loop,
+        # the one at 16 is handed over
+        "pagerank_int": lambda: graph.pagerank_int(e, iters=17),
+        "label_propagation": lambda: graph.label_propagation(e, iters=17),
+        "bfs_distances": lambda: graph.bfs_distances(e, seeds, max_hops=8),
+        "triangle_counts": lambda: graph.triangle_counts(e),
+        "connected_components": lambda: canonicalize.connected_components(e),
+    }
+    for name, build in builds.items():
+        before = _stored_rdd_ids(spark)
+        df = build()
+        df.collect()
+        _unpersist(df)
+        assert _stored_rdd_ids(spark) == before, name

@@ -1,19 +1,21 @@
 """Per-turn text equality under stable turn ordering — THE row invariant
-(BASELINE.json input_hint), plus dedup and order-independence properties."""
+(BASELINE.json input_hint), plus dedup, dense ordinals, chunk-salted
+per-node text reassembly and order-independence properties of the derive
+engine (``extract.derive_nodes_stream`` / ``extract.node_text_agg``)."""
 
 from pyspark.sql import functions as F
 
 from open_source_legislation_spark import oracle, rules
-from open_source_legislation_spark.operators import reassembly
+from open_source_legislation_spark.operators import extract
 
 
 def test_per_turn_text_equality(spark, transcripts_df, transcripts_pd, entity_dict_pd):
-    """Reassembled (conv_id, turn_idx) → clean_text equals the oracle's
+    """Derived (conv_id, turn_idx) → clean_text equals the oracle's
     ordered, deduped, cleaned turn set exactly."""
-    ordered = reassembly.ordered_turns(transcripts_df)
+    derived = extract.derive_nodes_stream(transcripts_df)
     got = {
         (r["conv_id"], r["turn_idx"]): r["clean_text"]
-        for r in ordered.select("conv_id", "turn_idx", "clean_text").collect()
+        for r in derived.select("conv_id", "turn_idx", "clean_text").collect()
     }
     o = oracle.run_oracle(transcripts_pd, entity_dict_pd)
     exp = {
@@ -24,19 +26,19 @@ def test_per_turn_text_equality(spark, transcripts_df, transcripts_pd, entity_di
 
 
 def test_dedup_first_writer_wins(spark, transcripts_df):
-    ordered = reassembly.ordered_turns(transcripts_df)
+    derived = extract.derive_nodes_stream(transcripts_df)
     dups = (
-        ordered.groupBy("conv_id", "turn_idx").count().filter(F.col("count") > 1).count()
+        derived.groupBy("conv_id", "turn_idx").count().filter(F.col("count") > 1).count()
     )
     assert dups == 0
     # synth injects ~1% duplicates, so dedup must have removed rows
-    assert ordered.count() < transcripts_df.count()
+    assert derived.count() < transcripts_df.count()
 
 
 def test_ord_is_dense_per_conv(spark, transcripts_df):
-    ordered = reassembly.ordered_turns(transcripts_df)
+    derived = extract.derive_nodes_stream(transcripts_df)
     bad = (
-        ordered.groupBy("conv_id")
+        derived.groupBy("conv_id")
         .agg(F.max("ord").alias("mx"), F.count("*").alias("n"))
         .filter(F.col("mx") != F.col("n"))
         .count()
@@ -45,32 +47,41 @@ def test_ord_is_dense_per_conv(spark, transcripts_df):
 
 
 def test_reassemble_documents_order(spark, transcripts_df):
-    """Chunked (skew-safe) reassembly equals a direct ordered join —
-    chunk boundaries must not disturb turn order."""
-    ordered = reassembly.ordered_turns(transcripts_df)
-    docs = reassembly.reassemble_documents(ordered, chunk_size=7)
+    """Chunked (skew-safe) per-node text reassembly equals a single-phase
+    ordered collect — chunk boundaries must not disturb turn order."""
+    derived = extract.derive_nodes_stream(transcripts_df)
+    docs = extract.node_text_agg(derived, chunk_size=7)
     direct = (
-        ordered.groupBy("conv_id")
+        derived.filter(F.col("node_id").isNull())
+        .groupBy("current_node")
         .agg(
             F.concat_ws(
                 "\n",
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("turn_idx", "clean_text"))),
+                    F.array_sort(F.collect_list(F.struct("ord", "clean_text"))),
                     lambda s: s["clean_text"],
                 ),
             ).alias("doc_text")
         )
     )
-    joined = docs.join(direct.withColumnRenamed("doc_text", "expected"), "conv_id")
-    assert joined.filter(F.col("doc_text") != F.col("expected")).count() == 0
-    assert docs.count() == ordered.select("conv_id").distinct().count()
+    got = {r["node_id"]: r["node_text"] for r in docs.collect()}
+    exp = {r["current_node"]: r["doc_text"] for r in direct.collect()}
+    assert got == exp
+    # the stitch phase is exercised: some node spans more than one chunk
+    assert docs.filter(F.col("n_paragraphs") > 7).count() > 0
+    assert docs.count() == (
+        derived.filter(F.col("node_id").isNull())
+        .select("current_node")
+        .distinct()
+        .count()
+    )
 
 
 def test_order_independence_under_repartition(spark, transcripts_df):
     """Shuffled input order / different partitioning → identical output
     (SURVEY §5.2 property 5)."""
-    a = reassembly.ordered_turns(transcripts_df, num_partitions=3)
-    b = reassembly.ordered_turns(transcripts_df.repartition(17), num_partitions=None)
+    a = extract.derive_nodes_stream(transcripts_df, num_partitions=3)
+    b = extract.derive_nodes_stream(transcripts_df.repartition(17), num_partitions=None)
     cols = ["conv_id", "turn_idx", "clean_text", "ord"]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
     assert b.select(cols).exceptAll(a.select(cols)).count() == 0
@@ -78,7 +89,7 @@ def test_order_independence_under_repartition(spark, transcripts_df):
 
 def test_clean_udf_matches_rules(spark, transcripts_df):
     sample = transcripts_df.limit(200).withColumn(
-        "c", reassembly.clean_text_udf("text")
+        "c", extract.turn_payload_udf("text").getField("clean_text")
     )
     for r in sample.select("text", "c").collect():
         assert r["c"] == rules.clean_text(r["text"])
