@@ -230,7 +230,8 @@ def near_dup_clusters(
     (≪ corpus — only near-dups enter); the final assignment is one left
     join of the corpus against the small member-label frame.
 
-    Output: ``(doc_id, canonical_id, is_kept)``.
+    Output: ``(doc_id, canonical_id, is_kept)``; the CC labels' checkpoint
+    is handed over as ``_osl_persists``.
     """
     from .canonicalize import connected_components
 
@@ -244,11 +245,13 @@ def near_dup_clusters(
         "doc_id",
         "left",
     )
-    return out.select(
+    out = out.select(
         "doc_id",
         F.coalesce("_can", "doc_id").alias("canonical_id"),
         (F.coalesce("_can", "doc_id") == F.col("doc_id")).alias("is_kept"),
     )
+    out._osl_persists = labels._osl_persists
+    return out
 
 
 def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:

@@ -80,6 +80,7 @@ class PipelineResult:
         applicable_defs_fn: Callable[[], DataFrame],
         rewritten_fn: Callable[[], DataFrame],
         spill_dir: str,
+        persists: list,
     ) -> None:
         self.turns = turns
         self._fns = {
@@ -93,6 +94,9 @@ class PipelineResult:
         }
         self._cache: dict[str, DataFrame] = {}
         self.spill_dir = spill_dir
+        # storage handles the lazy plans hand over (the alias CC's last
+        # checkpoint), filled as the plans are built
+        self._persists = persists
 
     def _lazy(self, key: str) -> DataFrame:
         if key not in self._cache:
@@ -128,10 +132,14 @@ class PipelineResult:
         return self._lazy("rewritten")
 
     def cleanup(self) -> None:
-        """Delete the derived-frame spill directory. Call after the outputs
-        are consumed."""
+        """Release the storage the built outputs hold and delete the
+        derived-frame spill directory. Call after the outputs are
+        consumed."""
         import shutil
 
+        for h in self._persists:
+            h.unpersist()
+        self._persists.clear()
         shutil.rmtree(self.spill_dir, ignore_errors=True)
         _LIVE_SPILL_DIRS.discard(self.spill_dir)
 
@@ -300,15 +308,12 @@ def run_pipeline(
     entity_dict: DataFrame,
     alias_edges: DataFrame | None = None,
     num_partitions: int | None = None,
-    max_conv_turns: int | None = None,
 ) -> PipelineResult:
     """Derive the hierarchy with ``extract.derive_nodes_stream`` (one
     exchange + one JVM sort + one Python pass — the mapInArrow stack
-    machine) or, when ``max_conv_turns`` is set, ``extract.
-    derive_nodes_sharded`` (the skew escape hatch: a conversation whose
-    turn index reaches it is derived in ``(conv_id, turn_range)`` shards
-    across tasks with stitched boundary state); then spill the derived
-    frame to parquet and build every output over the re-read spill.
+    machine; a hot conversation costs only the ~µs/row state pass), then
+    spill the derived frame to parquet and build every output over the
+    re-read spill.
 
     The multiply-consumed derived frame is written to a columnar spill and
     re-read, so each downstream branch PRUNES the columns it needs (node
@@ -318,14 +323,7 @@ def run_pipeline(
     is an Iceberg materialization, cf. plans/checkpoint.py). Call
     ``PipelineResult.cleanup()`` when done.
     """
-    if max_conv_turns is not None:
-        derived = extract.derive_nodes_sharded(
-            transcripts, shard_turns=max_conv_turns, num_partitions=num_partitions
-        )
-    else:
-        derived = extract.derive_nodes_stream(
-            transcripts, num_partitions=num_partitions
-        )
+    derived = extract.derive_nodes_stream(transcripts, num_partitions=num_partitions)
     spill_dir = tempfile.mkdtemp(prefix="osl_derived_")
     # exit-time backstop for callers that can only consume the outputs
     # LAZILY and never reach cleanup() (contract queries return a
@@ -337,10 +335,6 @@ def run_pipeline(
     # dead callbacks.
     _register_spill_dir(spill_dir)
     derived.write.mode("overwrite").parquet(spill_dir)
-    # the sharded engine's per-round DISK_ONLY caches back the derived
-    # plan; the spill copy subsumes them
-    for cached in getattr(derived, "_osl_persists", []):
-        cached.unpersist()
     # explicit schema: an empty input writes no part files, and the
     # schema must survive that
     derived = spark.read.schema(extract._DERIVED_SCHEMA).parquet(spill_dir)
@@ -354,6 +348,7 @@ def run_pipeline(
     # memoized so all outputs agree. Lazy construction changes WHEN a plan
     # is built, never what it computes.
     shared: dict[str, DataFrame] = {}
+    persists: list = []
 
     def _memo(key: str, fn) -> DataFrame:
         if key not in shared:
@@ -395,6 +390,7 @@ def run_pipeline(
         )
         if alias_edges is not None:
             labels = canonicalize.connected_components(alias_edges)
+            persists.extend(labels._osl_persists)
             triples = triples.unionByName(canonicalize.alias_of_triples(labels))
         return triples
 
@@ -485,4 +481,5 @@ def run_pipeline(
         applicable_defs_fn=_applicable_defs,
         rewritten_fn=lambda: _rewritten_turns(derived, _linked()),
         spill_dir=spill_dir,
+        persists=persists,
     )

@@ -360,7 +360,9 @@ def q_cc_alias(spark, sf_dir):
         F.concat(F.lit("g"), (F.col("user_id") % 7).cast("string")).alias("dst"),
     ).distinct()
     labels = canonicalize.connected_components(star.unionByName(bridge))
-    return labels.select("member", "canonical")
+    out = labels.select("member", "canonical")
+    out._osl_persists = labels._osl_persists
+    return out
 
 
 def q_join_defs_scope(spark, sf_dir):

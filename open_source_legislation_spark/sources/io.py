@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
+from ..operators._cache import CheckpointHandle, truncate_lineage
 
 
 def table_format(spark: SparkSession) -> str:
@@ -145,7 +146,12 @@ def upsert_table(
         merged = keep.unionByName(updates)
     else:
         merged = updates
-    # materialize before overwrite (parquet has no snapshot isolation)
-    merged = merged.localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(path)
+    # materialize before overwrite (parquet has no snapshot isolation);
+    # the checkpoint blocks are dead once the overwrite has landed
+    merged = truncate_lineage(merged)
+    handle = CheckpointHandle(merged)
+    try:
+        merged.write.mode("overwrite").parquet(path)
+    finally:
+        handle.unpersist()
     return path

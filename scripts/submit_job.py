@@ -21,6 +21,10 @@ skips buckets whose manifest rows are already committed
 processingHelpers.py:55-76). Per-bucket lineage + metrics land in
 ``<out>/_manifest`` and ``<out>/_metrics``.
 
+Hot conversations need no setting: the derive engine runs its regex work
+before the ``conv_id`` shuffle, so a hot conversation costs only the
+~µs/row state pass (SCALE.md, "Skew").
+
 In the sandbox (no cluster) the same script runs under
 ``spark-submit --master 'local[8]'`` — exercised by
 tests/test_submit_job.py.
@@ -52,14 +56,6 @@ def main(argv: list[str] | None = None) -> int:
         default=None,
         help="abort after N buckets (kill-and-resume testing)",
     )
-    p.add_argument(
-        "--max-conv-turns",
-        type=int,
-        default=None,
-        help="skew escape hatch: conversations past this turn count are "
-        "derived in (conv_id, turn_range) shards across tasks with "
-        "stitched boundary state (design point ~1e9)",
-    )
     args = p.parse_args(argv)
 
     # imports deferred until after spark-submit has placed --py-files on the
@@ -82,11 +78,7 @@ def main(argv: list[str] | None = None) -> int:
         entity_dict = spark.read.parquet(args.entity_dict)
 
     runner = CheckpointedRunner(
-        spark,
-        out_dir=args.out,
-        run_id=args.run_id,
-        num_buckets=args.buckets,
-        max_conv_turns=args.max_conv_turns,
+        spark, out_dir=args.out, run_id=args.run_id, num_buckets=args.buckets
     )
     t0 = time.time()
     processed = runner.run(transcripts, entity_dict, fail_after=args.fail_after)

@@ -1,8 +1,8 @@
 """The derive engine must reproduce the pure-Python oracle exactly —
 triples, deduped/cleaned turns and hierarchy nodes — on every input
-(duplicates, hot-conversation skew, dirty text); its sharded variant must
-be bit-identical to the single-task kernel, and neither may depend on the
-partition count."""
+(duplicates, hot-conversation skew, a conversation spanning many Arrow
+batches, dirty text), and its output must not depend on the partition
+count."""
 
 from __future__ import annotations
 
@@ -10,22 +10,6 @@ import pandas as pd
 
 from open_source_legislation_spark import oracle, schemas, synth
 from open_source_legislation_spark.plans.pipeline import run_pipeline
-
-_COLS = [
-    "conv_id",
-    "turn_idx",
-    "ord",
-    "clean_text",
-    "node_id",
-    "node_raw_id",
-    "node_parent",
-    "level_classifier",
-    "node_name",
-    "node_status",
-    "current_node",
-    "in_defs_scope",
-]
-
 
 def _rows(pdf: pd.DataFrame, cols: list[str]) -> set[tuple]:
     """Row set of a pandas frame with NaN/NaT read as None (Spark's null)."""
@@ -75,67 +59,23 @@ def test_engines_equivalent_skewed_dups(spark, entity_dict_df, entity_dict_pd):
     _assert_matches_oracle(spark, entity_dict_df, entity_dict_pd, pdf)
 
 
-def test_sharded_engine_equivalent_on_giant_conv(spark, entity_dict_df):
-    """One conversation ≫ shard size: the (conv_id, turn_range) sharded
-    engine — shards in different tasks, boundary state (stack, id counts,
-    open node, defs scope, ordinals) stitched across rounds — must be
-    bit-identical to the single-task kernel."""
-    from pyspark.sql import functions as F
-
-    from open_source_legislation_spark.operators import extract
-
-    # 45% of all turns in one conversation, duplicates included, with a
-    # shard size small enough that the hot conv spans many shards AND tiny
-    # Arrow batches so shards also span batch boundaries internally
+def test_engine_matches_oracle_on_giant_conv(spark, entity_dict_df, entity_dict_pd):
+    """45% of all turns in one conversation, duplicates included, through
+    64-row Arrow batches: the hot conversation spans many batches, so the
+    state kernel's cross-batch carry (stack, id counts, open node, defs
+    scope, ordinals) must be exact for the oracle match to hold."""
     pdf = synth.make_transcripts(
         seed=31, n_turns_target=1200, hot_fraction=0.45, dup_fraction=0.06
     )
-    tdf = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
+    hot = pdf.groupby("conv_id").size().idxmax()
+    assert pdf[pdf.conv_id == hot].turn_idx.max() >= 120
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "64")
     try:
-        base = set(
-            map(
-                tuple,
-                extract.derive_nodes_stream(tdf, num_partitions=4)
-                .select(*_COLS)
-                .collect(),
-            )
-        )
-        sharded_df = extract.derive_nodes_sharded(
-            tdf, shard_turns=60, num_partitions=4
-        )
-        sharded = set(map(tuple, sharded_df.select(*_COLS).collect()))
+        _assert_matches_oracle(spark, entity_dict_df, entity_dict_pd, pdf)
     finally:
         spark.conf.set(key, old)
-    assert sharded == base
-    # the giant conv really was split: >1 turn-range bucket existed
-    hot = pdf.groupby("conv_id").size().idxmax()
-    assert pdf[pdf.conv_id == hot].turn_idx.max() >= 120
-    # no sentinel rows leak into the output
-    assert not any(r[4] == extract._SHARD_STATE for r in sharded)
-
-
-def test_sharded_engine_noop_below_knob(spark, entity_dict_df):
-    """No conversation reaches the knob → identical plan path (falls back
-    to the single-pass engine), identical output."""
-    from open_source_legislation_spark.operators import extract
-
-    pdf = synth.make_transcripts(seed=5, n_turns_target=400)
-    tdf = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
-    base = set(
-        map(tuple, extract.derive_nodes_stream(tdf).select(*_COLS).collect())
-    )
-    sharded = set(
-        map(
-            tuple,
-            extract.derive_nodes_sharded(tdf, shard_turns=10_000_000)
-            .select(*_COLS)
-            .collect(),
-        )
-    )
-    assert sharded == base
 
 
 def test_stream_engine_partitioning_invariant(spark, entity_dict_df):

@@ -312,15 +312,32 @@ def _stored_rdd_ids(spark):
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
-def test_iterative_loops_release_storage(spark):
+def test_iterative_loops_release_storage(spark, tmp_path):
     """Every cache and lineage checkpoint a loop creates is either released
-    inside the loop or handed over via ``_osl_persists``: after collect +
+    inside the loop or handed over via ``_osl_persists`` — through the
+    operators that wrap connected components too: after collect +
     unpersisting the handles, block storage holds exactly the RDDs it
     held before the call."""
-    from open_source_legislation_spark.operators import canonicalize
+    from open_source_legislation_spark import queries
+    from open_source_legislation_spark.operators import canonicalize, dedup
 
     e = _ring_edges(spark)
     seeds = spark.createDataFrame([(0,)], "node long")
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(
+        [(i % 5, i) for i in range(20)], "user_id long, event_id long"
+    ).write.parquet(f"{sf_dir}/events.parquet")
+    # 10~11 and 11~12 are verified near-dup pairs at bands=8 (see
+    # test_dedup_scale), so the CC loop runs over a non-empty pair set
+    docs = spark.createDataFrame(
+        [
+            (10, "alpha beta gamma delta epsilon zeta eta theta"),
+            (11, "alpha beta gamma delta epsilon zeta eta iota"),
+            (12, "beta gamma delta epsilon zeta eta iota kappa mu"),
+            (30, "completely different words about unrelated topics here"),
+        ],
+        "doc_id long, text string",
+    )
     builds = {
         # 17 iterations: the checkpoint at 8 is released inside the loop,
         # the one at 16 is handed over
@@ -329,6 +346,10 @@ def test_iterative_loops_release_storage(spark):
         "bfs_distances": lambda: graph.bfs_distances(e, seeds, max_hops=8),
         "triangle_counts": lambda: graph.triangle_counts(e),
         "connected_components": lambda: canonicalize.connected_components(e),
+        "q_cc_alias": lambda: queries.q_cc_alias(spark, sf_dir),
+        "dedup_cluster_keep": lambda: dedup.near_dup_clusters(
+            docs, num_perm=16, bands=8, threshold=0.5
+        ),
     }
     for name, build in builds.items():
         before = _stored_rdd_ids(spark)
@@ -336,3 +357,18 @@ def test_iterative_loops_release_storage(spark):
         df.collect()
         _unpersist(df)
         assert _stored_rdd_ids(spark) == before, name
+
+
+def test_pipeline_cleanup_releases_alias_cc_storage(
+    spark, transcripts_df, entity_dict_df, alias_edges_df
+):
+    """``run_pipeline(alias_edges=)`` runs connected components inside
+    the triples plan; ``PipelineResult.cleanup()`` releases the checkpoint
+    it hands over."""
+    before = _stored_rdd_ids(spark)
+    res = run_pipeline(
+        spark, transcripts_df, entity_dict_df, alias_edges=alias_edges_df
+    )
+    assert res.triples.filter(F.col("pred") == "alias_of").count() > 0
+    res.cleanup()
+    assert _stored_rdd_ids(spark) == before

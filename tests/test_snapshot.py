@@ -1,4 +1,5 @@
-"""Snapshot-versioned sink: time travel, immutability, commit point."""
+"""Table sinks: the snapshot-versioned sink (time travel, immutability,
+commit point) and the keyed upsert."""
 
 from __future__ import annotations
 
@@ -59,3 +60,20 @@ def test_snapshot_uncommitted_version_rejected(spark):
     os.makedirs(os.path.join(base, "t", "v=9"), exist_ok=True)
     with pytest.raises(ValueError):
         osl_io.read_snapshot(spark, base, "t", version=9)
+
+
+def test_upsert_existing_table_merges_and_releases_storage(spark, tmp_path):
+    """Upserting into an existing table replaces rows by key, and the
+    checkpoint taken before the overwrite is released once it has landed:
+    block storage holds exactly the RDDs it held before the upsert."""
+    base = str(tmp_path)
+    osl_io.write_table(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k: long, v: string"), base, "t"
+    )
+    updates = spark.createDataFrame([(2, "B"), (3, "c")], "k: long, v: string")
+    before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    osl_io.upsert_table(spark, updates, base, "t", key="k")
+    after = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    assert after == before
+    got = sorted(map(tuple, spark.read.parquet(os.path.join(base, "t")).collect()))
+    assert got == [(1, "a"), (2, "B"), (3, "c")]
